@@ -53,6 +53,23 @@ def embed_deterministic(col: Column, dim: int = DEFAULT_DIM, seed: str = "emb") 
     return F.array(*comps)
 
 
+def embed_text(text: str, dim: int = DEFAULT_DIM, seed: str = "emb") -> list[float]:
+    """``embed_deterministic`` of one text, computed on the driver with
+    hashlib: the same md5 digits of the UTF-8 bytes, the same double
+    arithmetic and the same rounding to float32, so every component
+    equals the SQL value bit for bit. A query vector needs no Spark
+    plan this way."""
+    import hashlib
+
+    scale = float(16**15 - 1)
+    comps = [
+        int(hashlib.md5(f"{seed}|{i}|{text}".encode("utf-8")).hexdigest()[:15], 16)
+        / scale * 2.0 - 1.0
+        for i in range(dim)
+    ]
+    return np.asarray(comps, dtype=np.float32).tolist()
+
+
 # ------------------------------------------------------- pandas-UDF path
 
 _MODEL = None  # per-executor singleton

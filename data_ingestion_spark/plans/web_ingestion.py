@@ -106,13 +106,14 @@ def run_website_ingestion(
     fetcher: Fetcher | None = None,
 ) -> int:
     """Execute: create the collection, upsert, return chunk count
-    (the reference's component sequence W:230-245 as one job)."""
+    (the reference's component sequence W:230-245 as one job; the count
+    comes from the written parquet footers)."""
     store = ParquetVectorStore(spark, cfg.store_path)
     normalized = cfg.index_name.lower().replace("-", "_").replace(".", "_")
     store.create_collection(normalized)
     df = website_ingestion(spark, cfg, fetcher)
     store.upsert(df)
-    return store.read_collection(normalized).count()
+    return store.count_collection(normalized)
 
 
 def sitemap_seeded_urls(

@@ -16,19 +16,22 @@ reference can switch call-by-call (SURVEY.md §3.3):
 | rag_query          Q:178-200   | EngineQuery.rag_query         |
 
 Where the reference round-trips GraphQL to Weaviate and len()s the
-response client-side, every method here is one lazy DataFrame plan:
-counts are pushed-down aggregates, top-k is TakeOrderedAndProject,
-and the store is the partitioned table from sources/sinks.py.
+response client-side, counts here are sums of the collection's parquet
+footer row counts (no Spark job), and a search is one Spark job: the
+query is embedded on the driver, only the collection's partition is
+read, and top-k is TakeOrderedAndProject. The store is the partitioned
+table from sources/sinks.py.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .functions.embedding import embed_deterministic
-from .functions.similarity import brute_force_topk, cosine
+from .functions.embedding import embed_text
+from .functions.similarity import cosine
 from .sources.sinks import ParquetVectorStore
 
 
@@ -40,13 +43,11 @@ class EngineQuery:
         spark: SparkSession,
         store: ParquetVectorStore,
         embed_dim: int = 8,
-        embed_fn: Callable[[F.Column], F.Column] | None = None,
         id_cols: tuple[str, ...] = ("doc_id", "url", "section_idx", "chunk_idx"),
     ):
         self.spark = spark
         self.store = store
         self.embed_dim = embed_dim
-        self._embed = embed_fn or (lambda c: embed_deterministic(c, embed_dim))
         #: candidate tiebreak/identity columns; whichever exist in the
         #: ingested schema are used (product-doc and website pipelines
         #: key chunks differently)
@@ -71,9 +72,9 @@ class EngineQuery:
 
     def get_record_count(self, index_name: str) -> int:
         """Q:94-118 — the reference fetches every record and len()s it;
-        here the count aggregates scan-side under partition pruning."""
+        here the partition's parquet footers are summed (no Spark job)."""
         self._require(index_name)
-        return self.store.read_collection(index_name).count()
+        return self.store.count_collection(index_name)
 
     def get_top_records(self, index_name: str, limit: int = 10) -> DataFrame:
         """Q:32-71 — first ``limit`` records by chunk order."""
@@ -96,10 +97,11 @@ class EngineQuery:
     def search_by_vector(
         self, index_name: str, vector: list[float], k: int = 5
     ) -> DataFrame:
-        """Q:167-176 — near_vector top-k (k=5 default per Q:174)."""
+        """Q:167-176 — near_vector top-k (k=5 default per Q:174). The
+        query vector is one array<double> literal."""
         self._require(index_name)
         chunks = self.store.read_collection(index_name)
-        qv = F.array(*[F.lit(float(x)) for x in vector])
+        qv = F.lit(np.asarray(vector, dtype=np.float64))
         scored = chunks.withColumn(
             "score", F.round(cosine(F.col("embedding"), qv), 6)
         )
@@ -112,21 +114,9 @@ class EngineQuery:
 
     def similarity_search(self, index_name: str, query: str, k: int = 5) -> DataFrame:
         """Q:143-164 — embed the query text, then vector top-k. The
-        query embeds through the same stage as documents (T7 ≡ T6)."""
-        self._require(index_name)
-        qrow = self.spark.createDataFrame([(query,)], "q string").select(
-            self._embed(F.col("q")).alias("qv")
-        )
-        chunks = self.store.read_collection(index_name)
-        scored = chunks.crossJoin(F.broadcast(qrow)).withColumn(
-            "score", F.round(cosine(F.col("embedding"), F.col("qv")), 6)
-        )
-        ids = self._ids(chunks)
-        return (
-            scored.orderBy(F.col("score").desc(), *ids)
-            .limit(k)
-            .select(*ids, "chunk_text", "score")
-        )
+        driver-side ``embed_text`` equals the documents' SQL embedding
+        bit for bit (T7 ≡ T6), so the search is one Spark job."""
+        return self.search_by_vector(index_name, embed_text(query, self.embed_dim), k)
 
     def rag_context(self, index_name: str, query: str, k: int = 5) -> str:
         """Q:192-198 — top-k retrieval concatenated into the prompt

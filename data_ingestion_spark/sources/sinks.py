@@ -32,6 +32,10 @@ from collections.abc import Callable, Iterator
 from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StringType, StructField, StructType
+
+from ..functions.similarity import _local_dataset
 
 
 class VectorStoreSink(Protocol):
@@ -53,15 +57,18 @@ class ParquetVectorStore:
     def __init__(self, spark: SparkSession, path: str, key: str = "index_name"):
         self.spark, self.path, self.key = spark, path, key
 
+    def _partition(self, name: str) -> str:
+        return os.path.join(self.path, f"{self.key}={name}")
+
     def create_collection(self, name: str) -> None:
-        os.makedirs(os.path.join(self.path, f"{self.key}={name}"), exist_ok=True)
+        os.makedirs(self._partition(name), exist_ok=True)
 
     def delete_collection(self, name: str) -> None:
         """S10: delete = drop the partition directory (at scale:
         ``ALTER TABLE ... DROP PARTITION`` on the metastore)."""
         import shutil
 
-        p = os.path.join(self.path, f"{self.key}={name}")
+        p = self._partition(name)
         if os.path.exists(p):
             shutil.rmtree(p)
 
@@ -85,7 +92,34 @@ class ParquetVectorStore:
         )
 
     def read_collection(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path).filter(F.col(self.key) == name)
+        """One collection's partition directory, with ``basePath`` so the
+        key column stays in the rows. The schema is explicit: the data
+        columns from a parquet footer of this partition (of any
+        collection when this one is empty) plus the key as a string.
+        That skips Spark's schema-inference job and the listing of every
+        other partition, and keeps a name like ``"042"`` from being
+        inferred as the integer 42."""
+        part = self._partition(name)
+        arrow = _local_dataset(part).schema
+        if not arrow.names:
+            arrow = _local_dataset(self.path).schema
+        spark_json = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        data = StructType.fromJson(json.loads(spark_json)) if spark_json else from_arrow_schema(arrow)
+        schema = StructType(
+            [f for f in data.fields if f.name != self.key] + [StructField(self.key, StringType())]
+        )
+        # the filter drops nothing here; it keeps the collection
+        # predicate visible in the scan's PartitionFilters
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", self.path)
+            .parquet(part)
+            .filter(F.col(self.key) == name)
+        )
+
+    def count_collection(self, name: str) -> int:
+        """Row count from the partition's parquet footers: no Spark job."""
+        return _local_dataset(self._partition(name)).count_rows()
 
 
 #: client factory signature: () -> object with .index(batch: list[dict])
@@ -618,7 +652,7 @@ def compact_collections(
     names = collections or store.list_collections()
     store.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     for name in names:
-        part_dir = os.path.join(store.path, f"{store.key}={name}")
+        part_dir = store._partition(name)
         before[name] = len([f for f in os.listdir(part_dir) if f.endswith(".parquet")])
         if before[name] <= target_files:
             continue

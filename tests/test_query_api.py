@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,7 +34,6 @@ def test_catalog_surface(engine):
     assert s1 == s2
 
 
-@pytest.mark.slow
 def test_similarity_and_rag(engine):
     col = engine.list_collections()[0]
     hits = engine.similarity_search(col, "spark filter join", k=3).collect()
@@ -54,6 +54,74 @@ def test_similarity_and_rag(engine):
     assert prompt.startswith("Answer based on the context")
     answer = engine.rag_query(col, "what is spark?", llm=lambda p: f"LLM({len(p)})")
     assert answer.startswith("LLM(")
+
+
+def _jobs_submitted(spark, fn) -> int:
+    """Spark jobs submitted while ``fn`` runs: the difference of the
+    next job id in the status store, so jobs from any thread count."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def next_id() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)  # newest first
+        return jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
+
+    before = next_id()
+    fn()
+    return next_id() - before
+
+
+def test_search_and_count_job_budget(spark, engine):
+    """A search is one Spark job (no schema inference, no query-row
+    plan); a record count reads parquet footers and submits none."""
+    col = engine.list_collections()[0]
+    assert _jobs_submitted(spark, lambda: engine.similarity_search(col, "spark join", k=3).collect()) == 1
+    assert _jobs_submitted(spark, lambda: engine.get_record_count(col)) == 0
+
+
+def test_embed_text_equals_sql_embedding(spark):
+    """The driver-side query embedding equals the SQL document
+    embedding element for element as float32."""
+    from data_ingestion_spark.functions.embedding import embed_deterministic, embed_text
+
+    texts = ["spark filter join", "", "café résumé", "日本語の検索", "rocket 🚀 emoji", "x" * 3000]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    for dim in (8, 64):
+        rows = df.select("t", embed_deterministic(F.col("t"), dim).alias("e")).collect()
+        for r in rows:
+            got = np.asarray(embed_text(r.t, dim), dtype=np.float32)
+            assert got.tobytes() == np.asarray(r.e, dtype=np.float32).tobytes(), (dim, r.t[:20])
+
+
+def test_similarity_search_matches_cross_join_plan(spark, engine):
+    """Rows and scores equal the plan that embedded the query in SQL
+    and cross-joined it onto the whole-root read, bit for bit, including
+    an exact stored chunk at score 1.0."""
+    from data_ingestion_spark.functions.embedding import embed_deterministic
+    from data_ingestion_spark.functions.similarity import cosine
+
+    col = engine.list_collections()[0]
+    chunks = spark.read.parquet(engine.store.path).filter(F.col("index_name") == col)
+    ids = engine._ids(chunks)
+
+    def reference(query: str, k: int):
+        qrow = spark.createDataFrame([(query,)], "q string").select(
+            embed_deterministic(F.col("q"), engine.embed_dim).alias("qv")
+        )
+        return (
+            chunks.crossJoin(F.broadcast(qrow))
+            .withColumn("score", F.round(cosine(F.col("embedding"), F.col("qv")), 6))
+            .orderBy(F.col("score").desc(), *ids)
+            .limit(k)
+            .select(*ids, "chunk_text", "score")
+            .collect()
+        )
+
+    stored = engine.get_top_records(col, limit=1).collect()[0].chunk_text
+    for query in ["spark filter join", "", "naïve 検索 🚀", stored, "long " * 600]:
+        got = engine.similarity_search(col, query, k=5).collect()
+        assert got == reference(query, 5), query[:20]
+    assert engine.similarity_search(col, stored, k=1).collect()[0].score == 1.0
 
 
 def test_delete_index(engine):

@@ -44,6 +44,61 @@ def test_parquet_store_idempotent_reupsert(spark, tmp_path):
     assert back.count() == docs.count()  # no duplication
 
 
+def test_numeric_looking_collection_names_stay_apart(spark, tmp_path):
+    """Collection names are strings even when they look like numbers:
+    "42" and "042" keep their own rows, counts and search results, and
+    a non-numeric collection beside them stays readable (partition type
+    inference would make the key an int, merging 42 with 042)."""
+    from data_ingestion_spark.query_api import EngineQuery
+
+    store = ParquetVectorStore(spark, str(tmp_path / "store"))
+    schema = "index_name string, chunk_idx int, chunk_text string, embedding array<float>"
+    want = {"42": 3, "042": 4}
+    store.upsert(
+        spark.createDataFrame(
+            [(n, i, f"{n}/{i}", [1.0, float(i)]) for n, m in want.items() for i in range(m)],
+            schema,
+        )
+    )
+    store.create_collection("docs")
+    eq = EngineQuery(spark, store, embed_dim=2)
+
+    def check() -> None:
+        for name, m in want.items():
+            assert eq.get_record_count(name) == m
+            rows = store.read_collection(name).collect()
+            assert len(rows) == m and {r.index_name for r in rows} == {name}
+            hits = eq.search_by_vector(name, [1.0, 0.0], k=10).collect()
+            assert sorted(r.chunk_text for r in hits) == [f"{name}/{i}" for i in range(m)]
+
+    check()
+    assert eq.get_record_count("docs") == 0
+    assert store.read_collection("docs").count() == 0
+    store.upsert(spark.createDataFrame([("docs", 0, "docs/0", [0.5, 0.5])], schema))
+    want["docs"] = 1
+    check()
+
+
+def test_count_collection_reads_footers(spark, tmp_path):
+    """``count_collection`` equals Spark's count per collection, skips
+    ``_``/``.`` files like Spark's file index, and an empty created
+    collection counts 0."""
+    import shutil
+
+    root = tmp_path / "store"
+    store = ParquetVectorStore(spark, str(root), key="lang")
+    store.upsert(load_table(spark, SF_SMALL, "documents").select("doc_id", "lang", "n_chars"))
+    part = root / "lang=en"
+    data = next(f for f in os.listdir(part) if f.endswith(".parquet"))
+    shutil.copy(part / data, part / f"_{data}")
+    shutil.copy(part / data, part / f".{data}")
+    for name in store.list_collections():
+        spark_count = spark.read.parquet(str(root)).filter(F.col("lang") == name).count()
+        assert store.count_collection(name) == spark_count > 0
+    store.create_collection("empty")
+    assert store.count_collection("empty") == 0
+
+
 def test_service_sink_batches(spark, tmp_path):
     out = tmp_path / "client"
     os.makedirs(out)
